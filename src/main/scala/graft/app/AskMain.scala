@@ -1,7 +1,8 @@
 package graft.app
 
 import graft.operators.Retrieval
-import org.apache.spark.sql.{DataFrame, SparkSession}
+import graft.util.Json
+import org.apache.spark.sql.{DataFrame, Row, SparkSession}
 import org.apache.spark.sql.functions._
 
 /** Thin query CLI over the materialized graph tables — reproduces the
@@ -73,36 +74,33 @@ object AskMain {
       topK: Int = 5, includeSemantic: Boolean = true): DataFrame =
     ask(spark, graphView(spark, graphDir), question, topK, includeSemantic)
 
+  /** One [[ask]] result row as a JSON object; the CLI prints it and the HTTP
+    * face returns it.
+    */
+  def matchJson(r: Row, includeSemantic: Boolean): String = {
+    val sem =
+      if (includeSemantic && !r.isNullAt(r.fieldIndex("semantic_nodes")))
+        r.getSeq[String](r.fieldIndex("semantic_nodes"))
+      else Nil
+    s"""{"chunk_uid":${Json.str(r.getAs[String]("chunk_uid"))},""" +
+      s""""score":${Json.num(r.getAs[Double]("score"))},""" +
+      s""""document":${Json.str(Option(r.getAs[String]("document")).getOrElse(""))},""" +
+      s""""semantic_nodes":${Json.strs(sem)}}"""
+  }
+
   def main(args: Array[String]): Unit = {
     val a = KgBuildMain.parseArgs(args)
     val graphDir = a.getOrElse("graph", "/tmp/graft-kg-out")
     val question = a.getOrElse("question", "Who founded Acme Corp?")
     val topK = a.get("top-k").map(_.toInt).getOrElse(5)
     val includeSemantic = a.get("include-semantic").forall(_.toBoolean)
-    // spark-submit injects spark.master via system property; default to
-    // local mode for sandbox runs
-    val spark = SparkSession.builder()
-      .config("spark.master",
-        sys.props.getOrElse("spark.master", s"local[${sys.env.getOrElse("SPARK_GRAFT_CPUS", "8")}]"))
-      .config("spark.sql.shuffle.partitions", sys.env.getOrElse("SPARK_GRAFT_CPUS", "8"))
-      .appName("graft-ask")
-      .config("spark.sql.session.timeZone", "UTC")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
+    val spark = Session("graft-ask")
     val t0 = System.nanoTime()
     val rows = ask(spark, graphDir, question, topK, includeSemantic)
       .orderBy(col("score").desc).collect()
     val durMs = (System.nanoTime() - t0) / 1e6
-    rows.foreach { r =>
-      val sem =
-        if (includeSemantic && !r.isNullAt(r.fieldIndex("semantic_nodes")))
-          r.getSeq[String](r.fieldIndex("semantic_nodes")).mkString("[\"", "\",\"", "\"]")
-        else "[]"
-      println(
-        s"""{"chunk_uid":"${r.getAs[String]("chunk_uid")}","score":${r.getAs[Double]("score")},""" +
-          s""""document":"${Option(r.getAs[String]("document")).getOrElse("")}","semantic_nodes":$sem}""")
-    }
-    println(s"""{"matches":${rows.length},"duration_ms":$durMs,"question":${"\"" + question + "\""}}""")
+    rows.foreach(r => println(matchJson(r, includeSemantic)))
+    println(s"""{"matches":${rows.length},"duration_ms":$durMs,"question":${Json.str(question)}}""")
     spark.stop()
   }
 }

@@ -3,6 +3,7 @@ package graft.app
 import com.sun.net.httpserver.{HttpExchange, HttpServer}
 import java.net.{InetSocketAddress, URLDecoder}
 import java.nio.charset.StandardCharsets
+import graft.util.Json
 import org.apache.spark.sql.SparkSession
 import org.apache.spark.sql.functions._
 
@@ -19,6 +20,10 @@ import org.apache.spark.sql.functions._
   *   GET /ask?q=<question>&k=<n>&semantic=<bool>  -> JSON array of matches
   *   GET /fetch?id=<node id>              -> node row (embedding stripped)
   *
+  * A missing `q`/`id`, a `k` that is not a positive integer or a `semantic`
+  * that is not true/false is answered 400. A malformed `%` escape never
+  * reaches a handler: HttpServer rejects the request URI with 400 itself.
+  *
   * Usage: runMain graft.app.AskServer --graph /tmp/kg --port 8080
   *        [--bind 127.0.0.1]   (loopback default; wildcard is an opt-in)
   *        [--token <secret>]   (or GRAFT_ASK_TOKEN; enables static bearer
@@ -26,15 +31,8 @@ import org.apache.spark.sql.functions._
   */
 object AskServer {
 
-  private def jsonEscape(s: String): String = s.flatMap {
-    case '"' => "\\\""
-    case '\\' => "\\\\"
-    case '\n' => "\\n"
-    case '\r' => "\\r"
-    case '\t' => "\\t"
-    case c if c < ' ' => f"\\u${c.toInt}%04x"
-    case c => c.toString
-  }
+  /** Malformed client input: answered 400 with the message, not 500. */
+  private final class BadRequest(msg: String) extends Exception(msg)
 
   private def params(ex: HttpExchange): Map[String, String] =
     Option(ex.getRequestURI.getRawQuery).getOrElse("").split("&")
@@ -44,6 +42,11 @@ object AskServer {
         k -> URLDecoder.decode(v, "UTF-8")
       }.toMap
 
+  /** An optional parameter: `default` when absent, 400 when `parse` rejects it. */
+  private def param[T](p: Map[String, String], key: String, default: T, expected: String)(
+      parse: String => Option[T]): T =
+    p.get(key).fold(default)(v => parse(v).getOrElse(throw new BadRequest(s"$key must be $expected")))
+
   private def respond(ex: HttpExchange, code: Int, body: String): Unit = {
     val bytes = body.getBytes(StandardCharsets.UTF_8)
     ex.getResponseHeaders.set("Content-Type", "application/json")
@@ -52,16 +55,14 @@ object AskServer {
     try os.write(bytes) finally os.close()
   }
 
-  /** JSON-safe double: a NaN/Infinity score must not emit invalid JSON. */
-  private def jsonNum(d: Double): String =
-    if (java.lang.Double.isFinite(d)) d.toString else "null"
-
-  /** Internal errors return a generic body; the exception goes to the server
-    * log, not the client (raw messages can carry paths/query fragments).
+  /** Malformed input gets 400 and a message naming the parameter. Internal
+    * errors return a generic body; the exception goes to the server log, not
+    * the client (raw messages can carry paths/query fragments).
     */
   private def handleSafely(ex: HttpExchange)(body: => Unit): Unit =
     try body
     catch {
+      case e: BadRequest => respond(ex, 400, s"""{"error":${Json.str(e.getMessage)}}""")
       case e: Throwable =>
         System.err.println(s"[ask-server] ${ex.getRequestURI.getPath}: $e")
         respond(ex, 500, """{"error":"internal error"}""")
@@ -114,23 +115,13 @@ object AskServer {
         val q = p.getOrElse("q", "")
         if (q.isEmpty) respond(ex, 400, """{"error":"missing q"}""")
         else {
-          val k = p.get("k").map(_.toInt).getOrElse(5)
-          val semantic = p.get("semantic").forall(_.toBoolean)
+          val k = param(p, "k", 5, "a positive integer")(_.toIntOption.filter(_ > 0))
+          val semantic = param(p, "semantic", true, "true or false")(_.toBooleanOption)
           val rows = AskMain.ask(spark, view, q, k, semantic)
             .orderBy(col("score").desc).collect()
-          val items = rows.map { r =>
-            val sem =
-              if (semantic && !r.isNullAt(r.fieldIndex("semantic_nodes")))
-                r.getSeq[String](r.fieldIndex("semantic_nodes"))
-                  .map(jsonEscape).mkString("[\"", "\",\"", "\"]")
-              else "[]"
-            s"""{"chunk_uid":"${r.getAs[String]("chunk_uid")}",""" +
-              s""""score":${jsonNum(r.getAs[Double]("score"))},""" +
-              s""""document":"${jsonEscape(Option(r.getAs[String]("document")).getOrElse(""))}",""" +
-              s""""semantic_nodes":$sem}"""
-          }
+          val items = rows.map(AskMain.matchJson(_, semantic))
           respond(ex, 200,
-            s"""{"question":"${jsonEscape(q)}","matches":${items.mkString("[", ",", "]")}}""")
+            s"""{"question":${Json.str(q)},"matches":${items.mkString("[", ",", "]")}}""")
         }
       } })
     server.createContext("/fetch", (ex: HttpExchange) =>
@@ -142,9 +133,9 @@ object AskServer {
             val rows = graft.operators.Retrieval.fetchById(view.nodes, id)
               .select("id", "labels", "name").collect()
             val items = rows.map { r =>
-              s"""{"id":"${jsonEscape(r.getAs[String]("id"))}",""" +
-                s""""labels":${r.getSeq[String](1).map(jsonEscape).mkString("[\"", "\",\"", "\"]")},""" +
-                s""""name":"${jsonEscape(r.getAs[String]("name"))}"}"""
+              s"""{"id":${Json.str(r.getAs[String]("id"))},""" +
+                s""""labels":${Json.strs(r.getSeq[String](1))},""" +
+                s""""name":${Json.str(r.getAs[String]("name"))}}"""
             }
             respond(ex, 200, items.mkString("[", ",", "]"))
         }
@@ -161,16 +152,9 @@ object AskServer {
     // static bearer token: --token beats the env var; neither = open
     // (loopback dev mode)
     val token = a.get("token").orElse(sys.env.get("GRAFT_ASK_TOKEN"))
-    val spark = SparkSession.builder()
-      .config("spark.master",
-        sys.props.getOrElse("spark.master", s"local[${sys.env.getOrElse("SPARK_GRAFT_CPUS", "8")}]"))
-      .config("spark.sql.shuffle.partitions", sys.env.getOrElse("SPARK_GRAFT_CPUS", "8"))
-      .appName("graft-ask-server")
-      .config("spark.sql.session.timeZone", "UTC")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
+    val spark = Session("graft-ask-server")
     val server = start(spark, graphDir, port, bind, token)
-    println(s"""{"serving":"http://localhost:${server.getAddress.getPort}","graph":"$graphDir"}""")
+    println(s"""{"serving":"http://localhost:${server.getAddress.getPort}","graph":${Json.str(graphDir)}}""")
     Thread.currentThread.join() // serve until killed
   }
 }

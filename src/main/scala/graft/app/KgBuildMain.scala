@@ -2,9 +2,9 @@ package graft.app
 
 import graft.materialize.Materializer
 import graft.model.{ChunkProfile, RunConfig}
-import graft.qa.QaEvaluator.QaThresholds
+import graft.qa.QaEvaluator.{QaResult, QaThresholds}
 import graft.source.TranscriptGen
-import org.apache.spark.sql.SparkSession
+import graft.util.Json
 
 /** spark-submit entrypoint — the engine's analog of the reference CLI
   * (ref:scripts/kg_build.py → ref:src/fancyrag/cli/kg_build_main.py:27-168),
@@ -41,21 +41,24 @@ object KgBuildMain {
     m.filter(_._2.nonEmpty).toMap
   }
 
+  /** Whether a bare switch such as `--reset` is present; [[parseArgs]] keeps
+    * only flags that carry a value.
+    */
+  def hasSwitch(args: Array[String], name: String): Boolean = args.contains(s"--$name")
+
+  /** The run-log artifact (ref:src/fancyrag/kg/pipeline.py:1489-1546). */
+  def runLog(cfg: RunConfig, qa: QaResult): String = {
+    def obj(m: Map[String, Long]): String = m.toSeq.sortBy(_._1)
+      .map { case (k, v) => s"${Json.str(k)}:$v" }.mkString("{", ",", "}")
+    s"""{"run_key":${Json.str(cfg.runKey)},"status":${Json.str(qa.status)},""" +
+      s""""git_commit":${Json.str(cfg.gitCommit.getOrElse("unknown"))},""" +
+      s""""counts":${obj(qa.counts)},"anomalies":${obj(qa.anomalies)}}"""
+  }
+
   def main(args: Array[String]): Unit = {
     val a = parseArgs(args)
     val out = a.getOrElse("out", "/tmp/graft-kg-out")
-    // spark-submit injects spark.master via system property; default to
-    // local mode for sandbox runs
-    val spark = SparkSession.builder()
-      .config("spark.master",
-        sys.props.getOrElse("spark.master", s"local[${sys.env.getOrElse("SPARK_GRAFT_CPUS", "8")}]"))
-      .config("spark.sql.shuffle.partitions", sys.env.getOrElse("SPARK_GRAFT_CPUS", "8"))
-      .appName("graft-kg-build")
-      .config("spark.sql.adaptive.enabled", "true")
-      .config("spark.sql.adaptive.skewJoin.enabled", "true")
-      .config("spark.sql.session.timeZone", "UTC")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
+    val spark = Session("graft-kg-build")
 
     val base = ChunkProfile.presets(a.getOrElse("profile", "text"))
     val profile = base.copy(
@@ -82,7 +85,7 @@ object KgBuildMain {
       maxChecksumMismatches = a.get("max-checksum-mismatches").map(_.toLong).getOrElse(0L),
       maxSemanticOrphans = a.get("max-semantic-orphans").map(_.toLong).getOrElse(0L))
 
-    if (a.contains("reset")) Materializer.reset(spark, out)
+    if (hasSwitch(args, "reset")) Materializer.reset(spark, out)
 
     // source-mode switch (S4, ref:src/fancyrag/kg/phases.py:117-177):
     //   synth:<numConvs>       seeded synthetic transcript table
@@ -103,12 +106,7 @@ object KgBuildMain {
       else spark.read.parquet(input)
 
     val qa = KgBuild.run(spark, turns, cfg, out, thresholds)
-    // run-log artifact (sanitized JSON), ref:src/fancyrag/kg/pipeline.py:1489-1546
-    val log =
-      s"""{"run_key":"${cfg.runKey}","status":"${qa.status}",""" +
-        s""""git_commit":"${cfg.gitCommit.getOrElse("unknown")}",""" +
-        s""""counts":{${qa.counts.toSeq.sortBy(_._1).map { case (k, v) => s""""$k":$v""" }.mkString(",")}},""" +
-        s""""anomalies":{${qa.anomalies.toSeq.sortBy(_._1).map { case (k, v) => s""""$k":$v""" }.mkString(",")}}}"""
+    val log = runLog(cfg, qa)
     println(log)
     // artifact names pass the filesystem-safe sanitizer (F5); per-run copies
     // live under a run-key-derived directory like the reference's per-source

@@ -1,5 +1,7 @@
 package graft.materialize
 
+import graft.util.Json
+
 /** Property-value normalization, reproducing the reference's
   * `_sanitize_property_value` + `_ensure_jsonable` rules
   * (ref:src/fancyrag/kg/pipeline.py:759-819, 849-855) so row-level equality
@@ -63,7 +65,7 @@ object PropertySanitizer {
     case null    => "null"
     case None    => "null"
     case Some(x) => canonicalJson(x)
-    case s: String => jsonString(s)
+    case s: String => Json.str(s)
     case b: Boolean => if (b) "true" else "false"
     case n @ (_: Int | _: Long | _: Short | _: Byte) => n.toString
     case d: Double => renderNum(d)
@@ -73,24 +75,13 @@ object PropertySanitizer {
       m.toSeq
         .map { case (k, x) => (String.valueOf(k), canonicalJson(x)) }
         .sortBy(_._1)
-        .map { case (k, j) => jsonString(k) + ":" + j }
+        .map { case (k, j) => Json.str(k) + ":" + j }
         .mkString("{", ",", "}")
-    case other => jsonString(other.toString)
+    case other => Json.str(other.toString)
   }
 
   private def jsonScalar(x: Any): String = x match {
-    case s: String => jsonString(s)
+    case s: String => Json.str(s)
     case other     => canonicalJson(other)
   }
-
-  private def jsonString(s: String): String =
-    "\"" + s.flatMap {
-      case '"'  => "\\\""
-      case '\\' => "\\\\"
-      case '\n' => "\\n"
-      case '\r' => "\\r"
-      case '\t' => "\\t"
-      case c if c < ' ' => f"\\u${c.toInt}%04x"
-      case c => c.toString
-    } + "\""
 }

@@ -1,6 +1,6 @@
 package graft
 
-import graft.app.KgBuildMain.parseArgs
+import graft.app.KgBuildMain.{hasSwitch, parseArgs}
 import org.scalatest.funsuite.AnyFunSuite
 
 /** CLI arg pairing — multi-token values (sbt re-splits the runMain line on
@@ -23,5 +23,13 @@ class ArgsSpec extends AnyFunSuite {
   test("valueless flags and stray leading tokens are dropped") {
     assert(parseArgs(Array("stray", "--verbose", "--out", "/tmp/x")) ==
       Map("out" -> "/tmp/x"))
+  }
+
+  test("bare --reset switch is read though parseArgs drops it") {
+    for (args <- Seq(Array("--reset", "--out", "/tmp/x"), Array("--out", "/tmp/x", "--reset"))) {
+      assert(parseArgs(args) == Map("out" -> "/tmp/x"))
+      assert(hasSwitch(args, "reset"))
+    }
+    assert(!hasSwitch(Array("--out", "/tmp/reset"), "reset"))
   }
 }

@@ -99,6 +99,38 @@ class AskSpec extends AnyFunSuite {
     }
   }
 
+  test("malformed /ask input gets 400, not 500") {
+    val dir = Files.createTempDirectory("graft-askbad").toString
+    val turns = TranscriptGen.table(spark, 4L).toDF()
+    assert(KgBuild.run(spark, turns,
+      RunConfig(runKey = "kg:askbad", numPartitions = 2), dir).status == "pass")
+    val server = graft.app.AskServer.start(spark, dir, port = 0)
+    // a raw socket, because java.net.URI refuses to build a malformed escape
+    def status(pathAndQuery: String): Int = {
+      val socket = new java.net.Socket("localhost", server.getAddress.getPort)
+      try {
+        socket.getOutputStream.write(
+          s"GET $pathAndQuery HTTP/1.1\r\nHost: localhost\r\nConnection: close\r\n\r\n"
+            .getBytes(java.nio.charset.StandardCharsets.US_ASCII))
+        val statusLine = new java.io.BufferedReader(
+          new java.io.InputStreamReader(socket.getInputStream)).readLine()
+        statusLine.split(" ")(1).toInt
+      } finally socket.close()
+    }
+    try {
+      assert(status("/ask?q=acme&k=2") == 200)
+      for (k <- Seq("abc", "0", "-3", "2.5", "99999999999"))
+        assert(status(s"/ask?q=acme&k=$k") == 400, s"k=$k")
+      for (sem <- Seq("yes", "1", ""))
+        assert(status(s"/ask?q=acme&semantic=$sem") == 400, s"semantic=$sem")
+      for (q <- Seq("%zz", "acme%2", "acme%"))
+        assert(status(s"/ask?q=$q") == 400, s"q=$q")
+    } finally {
+      server.stop(0)
+      spark.catalog.clearCache()
+    }
+  }
+
   test("warm /ask meets the 1.5 s serving budget over the wire") {
     // The reference CI's hybrid-search latency contract
     // (ref:tests/smoke/test_stack.py:18-19, SMOKE_LATENCY_BUDGET_SECONDS;

@@ -11,11 +11,11 @@ object SharedSpark {
     .config("spark.sql.session.timeZone", "UTC")
     .config("spark.ui.enabled", "false")
     .config("spark.sql.adaptive.enabled", "true")
-    // Suites run CONCURRENTLY in the forked test JVM and share this one
-    // session. Under the default FIFO scheduler a sub-second job (e.g. an
-    // /ask round-trip in AskSpec's latency test) queues behind another
-    // suite's multi-second job on all 4 cores; FAIR round-robins task
-    // slots across concurrent jobs so short jobs schedule promptly.
+    // Suites share this one session. FAIR mode with no pools configured
+    // puts every job into the single `default` pool, which schedules FIFO
+    // inside, so a short job (e.g. an /ask round-trip in AskSpec's latency
+    // test) still queues behind a running multi-second job; isolating it
+    // needs a per-request `spark.scheduler.pool`.
     // Test-harness-only: production sessions (Bench/KgBuildMain) are
     // unaffected.
     .config("spark.scheduler.mode", "FAIR")
